@@ -165,7 +165,9 @@ def test_match_counts(spark, n_earned, n_redeem):
 
 
 def test_formulations_agree(spark, sf_dir):
-    """Array formulation and rank-join formulation must be identical."""
+    """Array formulation and rank-join formulation must be identical —
+    on the real corpus AND on a string-keyed scenario with timestamp
+    ties."""
     from thrivefinancedatapipeline_spark.datamodel import load_table
     from thrivefinancedatapipeline_spark.operators.fifo import (
         fifo_match_rank_join,
@@ -179,24 +181,6 @@ def test_formulations_agree(spark, sf_dir):
     b = set(map(tuple, fifo_match_rank_join(txns).collect()))
     assert a == b
 
-
-def test_arrow_formulation_agrees(spark, sf_dir):
-    """The measured-but-not-adopted mapInArrow kernel (r20 A/B) must
-    stay output-identical to fifo_match — on the real corpus AND on a
-    string-keyed scenario with timestamp ties."""
-    from thrivefinancedatapipeline_spark.datamodel import load_table
-    from thrivefinancedatapipeline_spark.operators.fifo import (
-        fifo_match_arrow,
-    )
-    from thrivefinancedatapipeline_spark.sources.ingest import (
-        transactions_from_events,
-    )
-
-    txns = transactions_from_events(load_table(spark, sf_dir, "events"))
-    a = set(map(tuple, fifo_match(txns).collect()))
-    b = set(map(tuple, fifo_match_arrow(txns).collect()))
-    assert a == b
-
     rows = [
         txn("E002", "earned", "2024-01-01", "C1", 10.0),
         txn("E001", "earned", "2024-01-01", "C1", 10.0),  # tie: id order
@@ -207,5 +191,5 @@ def test_arrow_formulation_agrees(spark, sf_dir):
     ]
     df = spark.createDataFrame(rows, schema=SCHEMA)
     a = set(map(tuple, fifo_match(df).collect()))
-    b = set(map(tuple, fifo_match_arrow(df).collect()))
+    b = set(map(tuple, fifo_match_rank_join(df).collect()))
     assert a == b

@@ -113,6 +113,77 @@ def test_failure_alert_names_failed_stage(spark, sf_dir, monkeypatch):
     assert "t-4" in msg
 
 
+def test_pipeline_tables_are_checkpointed_lazy_equivalents(spark, sf_dir):
+    """The returned match, history and balances are materialised (their
+    executed plans replan no shuffle) and hold the same rows as the
+    operators built lazily; the report totals, read from the
+    checkpointed match, equal build_report over the transactions."""
+    from thrivefinancedatapipeline_spark.analytics import build_report
+    from thrivefinancedatapipeline_spark.operators.balance import (
+        balance_history,
+        current_balances,
+    )
+    from thrivefinancedatapipeline_spark.operators.fifo import fifo_match
+
+    result = run_pipeline(spark, sf_dir)
+    txns = transactions_from_events(load_table(spark, sf_dir, "events"))
+    matched = fifo_match(txns)
+    history = balance_history(matched)
+    balances = current_balances(history)
+
+    def rows(df):
+        return set(map(tuple, df.collect()))
+
+    for got, want in (
+        (result.matched, matched),
+        (result.history, history),
+        (result.balances, balances),
+    ):
+        plan = got._jdf.queryExecution().executedPlan().toString()
+        assert "Exchange" not in plan, plan
+        assert rows(got) == rows(want)
+
+    lazy = build_report(txns, balances)["summary_metrics"]
+    for k, v in lazy.items():
+        assert result.report[k] == v, k
+
+
+def test_fifo_execution_failure_names_matching_stage(
+    spark, sf_dir, monkeypatch
+):
+    """A match that only fails when Spark executes it is reported as
+    perform_fifo_matching, the stage that materialises the match."""
+    from pyspark.errors import SparkRuntimeException
+
+    from thrivefinancedatapipeline_spark import pipeline as pl
+
+    real_fifo = pl.fifo_match
+
+    def failing_fifo(txns):
+        m = real_fifo(txns)
+        boom = F.raise_error(F.lit("forced fifo execution failure"))
+        return m.withColumn(
+            "trans_id",
+            F.when(F.col("trans_id").isNotNull(), boom).otherwise(
+                F.col("trans_id")
+            ),
+        )
+
+    monkeypatch.setattr(pl, "fifo_match", failing_fifo)
+    sent = []
+    with pytest.raises(
+        SparkRuntimeException, match="forced fifo execution failure"
+    ):
+        run_pipeline(
+            spark, sf_dir, correlation_id="t-6",
+            notify=lambda s, m: sent.append((s, m)),
+        )
+    assert len(sent) == 1
+    subj, msg = sent[0]
+    assert "FAILURE" in subj
+    assert "Failed stage: perform_fifo_matching" in msg
+
+
 def test_retries_exhausted_reraises_and_alerts(spark, sf_dir, monkeypatch):
     from thrivefinancedatapipeline_spark import pipeline as pl
 

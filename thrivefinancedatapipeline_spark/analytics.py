@@ -15,6 +15,12 @@ from pyspark.sql import functions as F
 def build_report(
     txns: DataFrame, balances: DataFrame, top_n: int = 10
 ) -> dict:
+    """Summary metrics and the top `top_n` customers by balance.
+
+    `txns` needs only `tctype` and `amount`: the transactions, or the
+    fifo_match output, which holds the same rows. `balances` is
+    current_balances output.
+    """
     totals = txns.agg(
         F.round(F.sum(F.when(F.col("tctype") == "earned", F.col("amount")).otherwise(0.0)), 2).alias("total_earned"),
         F.round(F.sum(F.when(F.col("tctype") == "spent", F.abs("amount")).otherwise(0.0)), 2).alias("total_spent"),

@@ -29,6 +29,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..datamodel import load_table
+# Python-codec kernels must never run single-threaded just because the
+# input was one row group (frame_sample at sf0.1: 18 s → 2.1 s, output
+# identical) — see functions/layout.py.
+from ..functions.layout import ensure_min_parallelism as _spread
 from . import avi, bmp, gif, ico, jpeg, png, pnm, qoi, wav
 
 DECODED_SCHEMA = (
@@ -336,12 +340,6 @@ def wav_payloads(docs: DataFrame) -> DataFrame:
     return _spread(docs.select("doc_id", "text")).mapInPandas(
         run, schema="doc_id long, payload binary"
     )
-
-
-# Python-codec kernels must never run single-threaded because the
-# input was one row group (guide §2.5; measured r20: frame_sample
-# 18 s → 2.1 s at sf0.1, output identical) — see functions/layout.py.
-from ..functions.layout import ensure_min_parallelism as _spread
 
 
 def q_multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:

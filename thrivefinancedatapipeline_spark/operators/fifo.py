@@ -92,124 +92,6 @@ def fifo_match(transactions: DataFrame) -> DataFrame:
     )
 
 
-def fifo_match_arrow(transactions: DataFrame) -> DataFrame:
-    """fifo_match with the per-customer pairing in a vectorized numpy
-    kernel behind ONE mapInArrow (guide §4.2) instead of interpreted
-    array HOFs: same single groupBy(customerid) shuffle, then the
-    sort/split/pair runs as flat whole-batch numpy (lexsort +
-    segmented cumsum ranks) rather than per-element interpreted
-    sort_array/filter/transform. Output rows identical to fifo_match
-    (both implement the rank-equality pairing over the
-    (createdat, trans_id) total order; trans_id is unique so the
-    struct sort and the lexsort agree; pinned in tests/test_fifo.py).
-
-    Measured r20 (interleaved steal-gated A/B, tools/ab_r20.py):
-    0.96x at sf0.1 but 1.04x at a x32 derived transaction relation —
-    the Arrow round trip of the full payload grows with data while
-    the interpreted-HOF saving does not. NOT adopted for
-    fifo_matching (no scale win for an extra Python boundary on the
-    flagship finance path); kept as the measured alternative the A/B
-    harness exercises.
-    """
-    from pyspark.sql.types import StructField, StructType
-
-    sch = transactions.schema
-    out_schema = StructType(
-        [
-            StructField("trans_id", sch["trans_id"].dataType),
-            StructField("tctype", sch["tctype"].dataType),
-            StructField("createdat", sch["createdat"].dataType),
-            StructField("customerid", sch["customerid"].dataType),
-            StructField("amount", sch["amount"].dataType),
-            StructField("redeemid", sch["trans_id"].dataType),
-        ]
-    )
-
-    row = F.struct("createdat", "trans_id", "tctype", "amount")
-    per = transactions.groupBy("customerid").agg(
-        F.collect_list(row).alias("rows")
-    )
-
-    def kernel(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        for b in batches:
-            if b.num_rows == 0:
-                continue
-            lst = b.column("rows")
-            counts = lst.value_lengths().to_numpy(zero_copy_only=False)
-            vals = lst.flatten()
-            n = len(vals)
-            if n == 0:
-                continue
-            parent = np.repeat(np.arange(b.num_rows, dtype=np.int64),
-                               counts)
-            created = vals.field("createdat")
-            tid = vals.field("trans_id").to_numpy(zero_copy_only=False)
-            created_i8 = created.cast(pa.int64()).to_numpy(
-                zero_copy_only=False
-            )
-            ise = pa.compute.equal(
-                vals.field("tctype"), "earned"
-            ).to_numpy(zero_copy_only=False)
-
-            # one customer's rows are contiguous (one list per row);
-            # lexsort with parent primary keeps groups contiguous and
-            # orders (createdat, trans_id) within — the struct-sort
-            # total order of fifo_match.
-            order = np.lexsort((tid, created_i8, parent))
-            p_s = parent[order]
-            ise_s = ise[order]
-
-            grp_start = np.empty(n, dtype=bool)
-            grp_start[0] = True
-            np.not_equal(p_s[1:], p_s[:-1], out=grp_start[1:])
-            gid = np.cumsum(grp_start) - 1
-            ngroups = int(gid[-1]) + 1
-            starts = np.flatnonzero(grp_start)
-            glens = np.diff(np.append(starts, n))
-
-            red_mask = ~ise_s
-            # sorted-coordinate positions of redeemers: groupwise
-            # contiguous, already in (createdat, trans_id) rank order
-            red_pos = np.flatnonzero(red_mask)
-            r_total = np.bincount(gid[red_mask], minlength=ngroups)
-            r_off = np.concatenate(([0], np.cumsum(r_total)))
-
-            e_cum = np.cumsum(ise_s)
-            prev_e = np.concatenate(([0], e_cum[starts[1:] - 1]))
-            e_rank = e_cum - np.repeat(prev_e, glens)  # 1-based
-
-            valid = ise_s & (e_rank <= r_total[gid])
-            # original-coordinate index of each earned row's matching
-            # redeemer; type-agnostic: redeemid is materialized by an
-            # Arrow take (null index -> null), never through numpy
-            match_orig = np.zeros(n, dtype=np.int64)
-            match_orig[valid] = order[
-                red_pos[r_off[gid[valid]] + e_rank[valid] - 1]
-            ]
-            take_idx = pa.array(match_orig, mask=~valid)
-
-            oidx = pa.array(order)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    vals.field("trans_id").take(oidx),
-                    vals.field("tctype").take(oidx),
-                    created.take(oidx),
-                    b.column("customerid").take(pa.array(p_s)),
-                    vals.field("amount").take(oidx),
-                    vals.field("trans_id").take(take_idx),
-                ],
-                names=[
-                    "trans_id", "tctype", "createdat", "customerid",
-                    "amount", "redeemid",
-                ],
-            )
-
-    return per.mapInArrow(kernel, out_schema)
-
-
 def fifo_match_rank_join(transactions: DataFrame) -> DataFrame:
     """Rank-equality-join formulation of fifo_match: identical output,
     two window shuffles + one join, but per-row (not per-customer)

@@ -4,10 +4,25 @@ Reference flow (src/thrive_cash_processing_dag.py:734):
   download_data >> validate_source >> perform_fifo_matching
   >> validate_results >> build_analytics >> send_alerts
 
-Spark-native shape: each stage is a DataFrame transformation; the only
-actions are the validation gates (tiny aggregate collects) and the
-final sinks. Lineage replaces XCom; a failed gate raises before any
-output is written — same fail-fast contract as the Airflow DAG.
+Spark-native shape: each stage is a DataFrame transformation, and,
+as the reference materialises a task's output before the next task
+reads it, three tables are materialised once per run:
+- ``perform_fifo_matching`` checkpoints the FIFO match
+  (tc_data_with_redemptions), so its shuffle runs once, in its own
+  stage;
+- ``build_analytics`` checkpoints the balance history and the current
+  balances before its report collects.
+Every later gate, report collect and sink reads those blocks instead
+of replanning the lineage. ``validate_source`` still runs over the
+lazy transactions before any shuffle, and a failed gate raises before
+any output is written — same fail-fast contract as the Airflow DAG.
+
+The checkpoints are ``localCheckpoint(eager=True)``, as in
+``run_corpus_pipeline``: executor-local blocks, released when the
+DataFrame is garbage-collected (no CacheManager entry, no unpersist).
+Fault posture: an executor lost after a checkpoint loses its blocks
+and fails the run at the next read; the per-stage retry policy still
+applies, and a retried stage recomputes its own checkpoint.
 
 Orchestration semantics carried over from the reference DAG, not just
 its data flow:
@@ -116,7 +131,11 @@ def run_pipeline(
     stage: the transaction split plus the Sales/Customers sheets land
     as parquet there and the pipeline reads the transactions BACK from
     staging (fifo_matching.load_from_staging parity); without it, the
-    projection stays lazy end-to-end — same results, one less write.
+    projection stays lazy up to the FIFO match — same results, one
+    less write.
+
+    The returned `matched`, `history` and `balances` are the run's
+    checkpointed tables (see the module docstring), not lazy plans.
 
     fail_on_result_violations mirrors the reference's hard gate; it
     defaults off because value-unbalanced books are expected on
@@ -156,7 +175,10 @@ def run_pipeline(
 
         source_checks = stage("validate_source", _validate_source)
 
-        matched = stage("perform_fifo_matching", lambda: fifo_match(txns))
+        matched = stage(
+            "perform_fifo_matching",
+            lambda: fifo_match(txns).localCheckpoint(eager=True),
+        )
 
         def _validate_results():
             violations = validate_results(matched)
@@ -171,13 +193,15 @@ def run_pipeline(
 
         stage("validate_results", _validate_results)
 
-        history = balance_history(matched)
-        balances = current_balances(history)
-
         def _build_analytics():
             from .analytics import build_report
 
-            full = build_report(txns, balances)
+            history = balance_history(matched).localCheckpoint(eager=True)
+            balances = current_balances(history).localCheckpoint(eager=True)
+            # fifo_match emits every transaction exactly once, so the
+            # type totals come from the checkpointed match, not from
+            # another scan of the source
+            full = build_report(matched, balances)
             report = {
                 **full["summary_metrics"],
                 "top_customers_by_balance": full["top_customers_by_balance"],
@@ -185,9 +209,9 @@ def run_pipeline(
             }
             if staged_counts is not None:
                 report["staged_counts"] = staged_counts
-            return report
+            return report, history, balances
 
-        report = stage("build_analytics", _build_analytics)
+        report, history, balances = stage("build_analytics", _build_analytics)
 
         if output_dir:
 

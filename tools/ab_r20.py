@@ -159,10 +159,6 @@ def _experiments(spark, scale: int):
     from thrivefinancedatapipeline_spark.operators.balance import (
         balance_history,
     )
-    from thrivefinancedatapipeline_spark.operators.fifo import (
-        fifo_match,
-        fifo_match_arrow,
-    )
     from thrivefinancedatapipeline_spark.sources.ingest import (
         transactions_from_events,
     )
@@ -211,10 +207,6 @@ def _experiments(spark, scale: int):
         "range_join": (
             lambda: _range_join_old(events),
             lambda: _range_join_new(events),
-        ),
-        "fifo": (
-            lambda: fifo_match(txns),
-            lambda: fifo_match_arrow(txns),
         ),
         "simhash": (
             simhash_old,
