@@ -351,3 +351,53 @@ def test_corpus_pipeline_priority_dedup_mode(spark, sf_dir):
     assert r["n_chunks"] >= r["n_after_quality_gate"]
     with pytest.raises(ValueError):
         run_corpus_pipeline(spark, sf_dir, dedup="nope")
+
+
+def test_corpus_pipeline_runs_each_keep_set_and_chunker_once(
+    spark, sf_dir, monkeypatch
+):
+    """Each funnel keep-set operator and the chunker execute once per
+    run. Every one is wrapped in a nondeterministic counting filter
+    (never pushed down or collapsed), whose accumulator must end at
+    the relation's own row count; the wrapped run's report equals the
+    plain run's."""
+    from pyspark.sql.types import BooleanType
+
+    from thrivefinancedatapipeline_spark.operators import (
+        dedup,
+        quality,
+        textops,
+    )
+    from thrivefinancedatapipeline_spark.pipeline import (
+        run_corpus_pipeline,
+    )
+
+    want = run_corpus_pipeline(spark, sf_dir)
+    rows, evaluated = {}, {}
+
+    def count_rows(module, name):
+        real = getattr(module, name)
+        acc = spark.sparkContext.accumulator(0)
+        evaluated[name] = acc
+
+        def tick(_doc_id):
+            acc.add(1)
+            return True
+
+        counted = F.udf(tick, BooleanType()).asNondeterministic()
+
+        def wrapper(*args):
+            out = real(*args)
+            rows[name] = out.count()
+            return out.filter(counted(F.col("doc_id")))
+
+        monkeypatch.setattr(module, name, wrapper)
+
+    count_rows(textops, "q_corpus_clean")
+    count_rows(dedup, "q_dedup_keep_canonical")
+    count_rows(quality, "q_quality_gate_by_lang")
+    count_rows(textops, "chunk_documents")
+
+    assert run_corpus_pipeline(spark, sf_dir) == want
+    assert all(rows.values()), rows
+    assert {name: acc.value for name, acc in evaluated.items()} == rows

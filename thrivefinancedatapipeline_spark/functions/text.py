@@ -65,13 +65,3 @@ def shingles(c: Column, n: int = 3) -> Column:
     Prefer staging tokens into a column + shingles_from_tokens() in
     hot paths (see that function's note)."""
     return shingles_from_tokens(tokens(c), n)
-
-
-def shingles_sql(c: str, n: int = 3) -> str:
-    """DuckDB twin of shingles(): list comprehension over 1-based toks."""
-    parts = " || ' ' || ".join(f"toks[i+{k}]" for k in range(n))
-    return (
-        f"(SELECT list_distinct([{parts} for i in range(1, len(toks) - {n - 2})]) "
-        f"FROM (SELECT {tokens_sql(c)} AS toks) "
-        f"WHERE len(toks) >= {n})"
-    )

@@ -493,7 +493,16 @@ def pd_simhash_pack():
     is < 2^60, nonneg) + one segmented add.reduceat; majority test
     `2*count > n_tokens` and the bit-OR pack are the same integer ops
     the SQL fold runs. Empty array -> 0, NULL -> NULL (aggregate()
-    semantics)."""
+    semantics).
+
+    Call restriction: the kernel is returned ``asNondeterministic()``
+    (the optimizer fence described above), so call it only from a
+    Project or a Filter (``select``/``withColumn``/``filter``). To
+    aggregate, join or window on the fingerprint, project it into a
+    column first (as `_simhash_df` does) and use that column: Spark's
+    analyzer rejects a nondeterministic expression inside a join
+    condition (INVALID_NON_DETERMINISTIC_EXPRESSIONS) or an aggregate
+    function's arguments, far from this definition."""
     global _SIM_PACK_KERNEL
     if _SIM_PACK_KERNEL is not None:
         return _SIM_PACK_KERNEL

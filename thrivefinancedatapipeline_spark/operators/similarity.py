@@ -2187,30 +2187,8 @@ ORACLES["knn_ivfpq_probe_sweep"] = _ivfpq_sweep_oracle()
 
 
 # ---------------------------------------------------------------------------
-# PREBUILT (r7-staged, NOT yet registered — tools/check_prebuilt.py).
+# IVF-PQ distortion audit (registered below).
 # ---------------------------------------------------------------------------
-
-def _pq_min_dist_expr(books: list, col: str) -> "F.Column":
-    """Sum over subspaces of the MINIMUM squared L2 to each codebook —
-    the per-vector PQ quantization error. Same literal-fold shape as
-    _pq_encode_expr (the anti-Janino form), reading `.d` of the
-    array_min struct instead of `.i`."""
-    per_m = []
-    for m, book in enumerate(books):
-        lit = "array(" + ",".join(
-            f"named_struct('i', {i + 1}, "
-            f"'c', array({','.join(str(int(x)) for x in cv)}))"
-            for i, (_cell, cv) in enumerate(book)
-        ) + ")"
-        sub = f"slice({col}, {m * PQ_SUB + 1}, {PQ_SUB})"
-        per_m.append(
-            f"array_min(transform({lit}, ct -> named_struct("
-            f"'d', aggregate(zip_with({sub}, ct.c, "
-            f"(x, c) -> (x - c) * (x - c)), 0L, (acc, e) -> acc + e), "
-            f"'i', ct.i))).d"
-        )
-    return F.expr(" + ".join(per_m))
-
 
 def ivfpq_distortion_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-coarse-cell PQ QUANTIZATION-ERROR audit — the third leg of
@@ -2222,16 +2200,14 @@ def ivfpq_distortion_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     codes carry no information. A cell whose ppm is an outlier has a
     codebook trained on somebody else's residual distribution — the
     signal that triggers retraining in production.
-    Prebuilt r7 (staged in tools/check_prebuilt.py).
 
     Exactness: every distance is exact int64 (micros diffs squared,
     summed over 8-dim subspaces), per-cell sums widen to
     DECIMAL(38,0), one truncating div each for the mean and the ppm.
 
-    Scale shape: ONE projection over the corpus (cell assign +
-    residual + 8 literal-fold subspace minima — the knn_ivfpq encode
-    pass with `.d` in place of `.i`), then a map-side-combinable
-    per-cell rollup. No joins, no windows."""
+    Scale shape: ONE projection over the corpus (a numpy batch
+    kernel: cell assign + residual + 8 subspace minima), then a
+    map-side-combinable per-cell rollup. No joins, no windows."""
     iv = _int_vecs(spark, sf_dir)
     coarse = _trained_centroids_cached(spark, sf_dir, iv)
     books = _ivfpq_books_cached(sf_dir, iv, coarse)

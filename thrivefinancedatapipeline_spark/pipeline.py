@@ -270,7 +270,23 @@ def run_corpus_pipeline(
     Composition is by doc_id keep-set SEMI-joins against the same
     query plans the driver oracles check — the pipeline cannot drift
     from the audited operators. Funnel counts are sequential
-    (each stage filters the previous stage's survivors)."""
+    (each stage filters the previous stage's survivors).
+
+    Materialisation points, as in `run_pipeline` (each a
+    ``localCheckpoint(eager=True)``, so every operator runs once per
+    run and each count reads its own blocks):
+    - three ``doc_id``-only keep-sets: ``keep1`` = the
+      q_corpus_clean ids, ``keep2 = keep1 ⋉ dedup ids``,
+      ``keep3 = keep2 ⋉ gate ids`` (8 bytes per document, never the
+      text); the quota stage, when on, checkpoints its selection;
+    - the narrow chunk table (doc_id, chunk_idx, n_tokens,
+      chunk_hash) of the survivor documents ``docs ⋉ keep3`` (or
+      ``docs ⋉`` the quota selection), read by both ``n_chunks`` and
+      the chunk-dedup window;
+    - the packed assignments, read by the report rollup and the sink.
+    Same fault posture as `run_pipeline`: an executor lost after a
+    checkpoint loses its blocks and fails the run at the next read."""
+    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     from .datamodel import load_table
@@ -279,45 +295,44 @@ def run_corpus_pipeline(
     from .operators.quality import q_quality_gate_by_lang
     from .operators.textops import chunk_documents, q_corpus_clean
 
+    if dedup == "priority":
+        from .operators.dedup import dedup_keep_priority as dedup_ids
+    elif dedup == "canonical":
+        dedup_ids = q_dedup_keep_canonical
+    else:
+        raise ValueError(f"unknown dedup mode {dedup!r}")
+
     docs = load_table(spark, sf_dir, "documents")
     report: dict = {"n_documents": docs.count()}
 
-    clean_ids = q_corpus_clean(spark, sf_dir).select("doc_id")
-    s1 = docs.join(clean_ids, "doc_id", "semi")
-    report["n_after_decontaminate"] = s1.count()
+    def keep_set(ids):
+        return ids.select("doc_id").localCheckpoint(eager=True)
 
-    if dedup == "priority":
-        from .operators.dedup import dedup_keep_priority
-
-        canon_ids = dedup_keep_priority(spark, sf_dir).select("doc_id")
-    elif dedup == "canonical":
-        canon_ids = q_dedup_keep_canonical(spark, sf_dir).select("doc_id")
-    else:
-        raise ValueError(f"unknown dedup mode {dedup!r}")
-    s2 = s1.join(canon_ids, "doc_id", "semi")
-    report["n_after_dedup"] = s2.count()
-
-    gate_ids = q_quality_gate_by_lang(spark, sf_dir).select("doc_id")
-    s3 = s2.join(gate_ids, "doc_id", "semi").localCheckpoint(eager=True)
-    report["n_after_quality_gate"] = s3.count()
+    keep1 = keep_set(q_corpus_clean(spark, sf_dir))
+    report["n_after_decontaminate"] = keep1.count()
+    keep2 = keep_set(keep1.join(dedup_ids(spark, sf_dir), "doc_id", "semi"))
+    report["n_after_dedup"] = keep2.count()
+    keep3 = keep_set(
+        keep2.join(q_quality_gate_by_lang(spark, sf_dir), "doc_id", "semi")
+    )
+    report["n_after_quality_gate"] = keep3.count()
+    survivors = docs.join(keep3, "doc_id", "semi")
 
     if token_budget_quota:
         from .operators.sampling import quota_select
 
         sel = quota_select(
-            s3.select("doc_id", "source", "text")
+            survivors.select("doc_id", "source", "text")
         ).localCheckpoint(eager=True)
-        s3 = s3.join(sel.select("doc_id"), "doc_id", "semi")
-        report["n_after_quota"] = s3.count()
+        survivors = docs.join(sel.select("doc_id"), "doc_id", "semi")
+        report["n_after_quota"] = sel.count()
         row = sel.agg(F.sum("nt").alias("t")).collect()[0]
         report["quota_tokens_selected"] = int(row.t or 0)
 
     # chunk ONLY the survivors: the keep-set semi-join sits beneath
     # the chunker, so dropped documents are never tokenized
-    chunks = chunk_documents(s3)
+    chunks = chunk_documents(survivors).localCheckpoint(eager=True)
     report["n_chunks"] = chunks.count()
-
-    from pyspark.sql import Window
 
     wdup = Window.partitionBy("chunk_hash").orderBy("doc_id", "chunk_idx")
     unique_chunks = (
@@ -329,7 +344,7 @@ def run_corpus_pipeline(
             F.col("n_tokens").cast("long").alias("n_tokens"),
         )
     )
-    lang = s3.select("doc_id", "lang")
+    lang = survivors.select("doc_id", "lang")
     packed = pack_assignments(
         unique_chunks.join(lang, "doc_id"),
         ["lang"], ["doc_id", "chunk_idx"], "n_tokens",
