@@ -1,6 +1,5 @@
-"""Round-10 prebuilds (r9-staged, registered in round 10): Spark ==
-DuckDB at two SFs plus per-operator invariants — the
-pre-registration pin the r5–r9 prebuilt catalogs used."""
+"""Round-10 operators, now registered: Spark == DuckDB at two SFs
+plus per-operator invariants."""
 
 import os
 
@@ -414,19 +413,7 @@ def test_source_curation_funnel_vs_duckdb_and_monotonicity(
 
 def test_r10_eleven_promoted_to_registered_catalog():
     """Round 10 registered the eleven r9-staged prebuilds: all in the
-    module QUERIES/ORACLES dicts (aggregated by the registry) and NO
-    LONGER in the prebuilt staging catalog (drained, the r6 state)."""
-    import sys
-
-    sys.path.insert(
-        0,
-        os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "tools",
-        ),
-    )
-    import check_prebuilt
-
+    module QUERIES/ORACLES dicts (aggregated by the registry)."""
     from thrivefinancedatapipeline_spark.registry import (
         all_oracles,
         all_queries,
@@ -445,7 +432,5 @@ def test_r10_eleven_promoted_to_registered_catalog():
         "source_token_cost_drift",
         "source_curation_funnel",
     }
-    staged = set(check_prebuilt._catalog())
-    assert staged & eleven == set()
     qs, os_ = all_queries(), all_oracles()
     assert eleven <= set(qs) and eleven <= set(os_)

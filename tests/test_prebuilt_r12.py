@@ -1,6 +1,5 @@
-"""Round-12 prebuilds (staged in tools/check_prebuilt.py in round 11):
-Spark == DuckDB at two SFs plus per-operator invariants — the
-pre-registration pin every prebuilt catalog since r5 has used.
+"""Round-12 operators, now registered: Spark == DuckDB at two SFs
+plus per-operator invariants.
 
 The r11 theme is knob-sweep telemetry: each sweep rides the proven
 machinery of a registered operator (probe counts, DF stop rules,

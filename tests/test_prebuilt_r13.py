@@ -1,6 +1,5 @@
-"""Round-13 prebuilds (staged in tools/check_prebuilt.py in round 12):
-Spark == DuckDB at two SFs plus per-operator invariants — the
-pre-registration pin every prebuilt catalog since r5 has used.
+"""Round-13 operators, now registered: Spark == DuckDB at two SFs
+plus per-operator invariants.
 
 The r12 theme is end-to-end attestation: corpus_pipeline_attest folds
 the ENTIRE run_corpus_pipeline funnel (decontaminate -> dedup ->
@@ -545,19 +544,7 @@ def test_chunk_size_formula_matches_brute_force_keep_rule():
 
 def test_r13_nine_promoted_to_registered_catalog():
     """Round 13 registered the nine r12-staged prebuilds: all in the
-    module QUERIES/ORACLES dicts (aggregated by the registry) and NO
-    LONGER in the prebuilt staging catalog (drained, the r6 state)."""
-    import sys
-
-    sys.path.insert(
-        0,
-        os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "tools",
-        ),
-    )
-    import check_prebuilt
-
+    module QUERIES/ORACLES dicts (aggregated by the registry)."""
     from thrivefinancedatapipeline_spark.registry import (
         all_oracles,
         all_queries,
@@ -574,7 +561,5 @@ def test_r13_nine_promoted_to_registered_catalog():
         "dedup_simhash_radius_sweep",
         "corpus_chunk_size_sweep",
     }
-    staged = set(check_prebuilt._catalog())
-    assert staged & nine == set()
     qs, os_ = all_queries(), all_oracles()
     assert nine <= set(qs) and nine <= set(os_)

@@ -1,6 +1,5 @@
-"""Round-14 prebuilds (staged in tools/check_prebuilt.py in round 13):
-Spark == DuckDB at two SFs plus per-operator invariants — the
-pre-registration pin every prebuilt catalog since r5 has used.
+"""Round-14 operators, now registered: Spark == DuckDB at two SFs
+plus per-operator invariants.
 
 The r13 theme is ingestion-to-checksum attestation: both raw sources
 (binaryFile and wholetext) now carry an END-TO-END oracle — real files

@@ -1,7 +1,5 @@
-"""Round-15 prebuild (staged in tools/check_prebuilt.py in round 14):
-Spark == DuckDB at two SFs plus identity pins to the registered batch
-operators — the pre-registration discipline every prebuilt catalog
-since r5 has used.
+"""Round-15 operator, now registered: Spark == DuckDB at two SFs
+plus identity pins to the registered batch operators.
 
 The r14 theme closes the streaming verification gap the r13 verdict
 named: the curation funnel's STREAMING head now carries the same

@@ -1,7 +1,5 @@
-"""Round-16 prebuilds (staged in tools/check_prebuilt.py in round 15):
-Spark == DuckDB at two SFs plus identity/nesting pins to the
-registered operators — the pre-registration discipline every prebuilt
-catalog since r5 has used.
+"""Round-16 operators, now registered: Spark == DuckDB at two SFs
+plus identity/nesting pins to the registered operators.
 
 The r15 theme extends the wide-simhash scale path's instrumentation:
 the 120-bit relation is now the documented pair source for the graph

@@ -1,6 +1,5 @@
-"""Round-7 prebuilds (staged in tools/check_prebuilt.py): Spark ==
-DuckDB at two SFs plus per-operator invariants — the pre-registration
-pin the r5/r6 prebuilt catalogs used."""
+"""Round-7 operators, now registered: Spark == DuckDB at two SFs
+plus per-operator invariants."""
 
 import os
 

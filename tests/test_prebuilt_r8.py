@@ -1,6 +1,5 @@
-"""Round-8 prebuilds (staged in tools/check_prebuilt.py): Spark ==
-DuckDB at two SFs plus per-operator invariants — the pre-registration
-pin the r5–r7 prebuilt catalogs used."""
+"""Round-8 operators, now registered: Spark == DuckDB at two SFs
+plus per-operator invariants."""
 
 import os
 
@@ -170,18 +169,7 @@ def test_events_stickiness_vs_duckdb(spark, sf_dir):
 def test_r8_six_promoted_to_registered_catalog():
     """Round 8 registered the six r7-staged prebuilds: they must all
     be in the module QUERIES/ORACLES dicts (aggregated by the
-    registry) and NO LONGER in the prebuilt staging catalog."""
-    import sys
-
-    sys.path.insert(
-        0,
-        os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "tools",
-        ),
-    )
-    import check_prebuilt
-
+    registry)."""
     from thrivefinancedatapipeline_spark.registry import (
         all_oracles,
         all_queries,
@@ -195,7 +183,5 @@ def test_r8_six_promoted_to_registered_catalog():
         "packing_efficiency",
         "ivfpq_distortion_audit",
     }
-    staged = set(check_prebuilt._catalog())
-    assert staged & six == set()
     qs, os_ = all_queries(), all_oracles()
     assert six <= set(qs) and six <= set(os_)

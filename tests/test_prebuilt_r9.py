@@ -1,6 +1,5 @@
-"""Round-9 prebuild (staged in tools/check_prebuilt.py): Spark ==
-DuckDB at two SFs plus per-operator invariants — the
-pre-registration pin the r5–r8 prebuilt catalogs used."""
+"""Round-9 operator, now registered: Spark == DuckDB at two SFs
+plus per-operator invariants."""
 
 import os
 
@@ -252,18 +251,7 @@ def test_balance_concentration_vs_duckdb_and_bounds(spark, sf_dir):
 def test_r9_six_promoted_to_registered_catalog():
     """Round 9 registered the six r8-staged prebuilds: they must all
     be in the module QUERIES/ORACLES dicts (aggregated by the
-    registry) and NO LONGER in the prebuilt staging catalog."""
-    import sys
-
-    sys.path.insert(
-        0,
-        os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "tools",
-        ),
-    )
-    import check_prebuilt
-
+    registry)."""
     from thrivefinancedatapipeline_spark.registry import (
         all_oracles,
         all_queries,
@@ -277,8 +265,6 @@ def test_r9_six_promoted_to_registered_catalog():
         "doc_length_outliers",
         "balance_concentration_by_segment",
     }
-    staged = set(check_prebuilt._catalog())
-    assert staged & six == set()
     qs, os_ = all_queries(), all_oracles()
     assert six <= set(qs) and six <= set(os_)
 

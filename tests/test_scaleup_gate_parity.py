@@ -35,7 +35,7 @@ def test_graph_consumer_parity_sf001(spark):
 
 def test_gate_subset_guards():
     """Unknown names and empty subset overrides must error, never
-    pass vacuously (the check_prebuilt rule; r16+r17 ADVICE)."""
+    pass vacuously."""
     import subprocess
 
     repo = os.path.join(os.path.dirname(__file__), "..")

@@ -1,38 +1,53 @@
 """Input-layout repair: minimum parallelism for compute-heavy stages.
 
-A single-file, single-row-group parquet input (the sf-dir layout —
-and, in production, any unsplittable input: one giant gzip, a
-one-row-group table written by a non-Spark writer) caps the scan at
-1-2 tasks no matter the cluster size (guide §2.5 "input skew" / §6
-split-size notes — `maxPartitionBytes` cannot split inside one row
-group). Any stage whose per-row work dwarfs a shuffle of its input —
-Python codec kernels, all-pairs interpreted vector folds — then runs
-effectively single-threaded.
+A parquet input written as one file with one row group (the sf-dir
+layout, and in production any table written by a non-Spark writer
+with a huge row group) caps its scan at one busy task whatever the
+cluster size: `maxPartitionBytes` cannot split inside a row group. A
+stage whose per-row work dwarfs a shuffle of its input (Python codec
+kernels, all-pairs interpreted vector folds) then runs on one core.
 
-`ensure_min_parallelism` is the conditional fix: repartition to the
-session's default parallelism ONLY when the current plan has fewer
-partitions. On any real multi-file layout the condition never fires
-and the plan is untouched, so this is scale-adaptive, not a local
-tuning knob. Keyless round-robin repartition is retry-safe (Spark
-sorts before repartition by default — SPARK-23207).
+`ensure_min_parallelism` decides from the scan's layout alone:
+- at least `defaultParallelism` input files: the scan is already
+  spread, so the plan is left alone and no footer is read;
+- otherwise the parquet footers' row groups are summed, and only a
+  sum below `defaultParallelism` adds one round-robin exchange.
 
-Measured r20 at sf0.1 (32 cores, identical outputs):
-multimodal_frame_sample 18 s → 2.1 s; dedup_embedding_cosine
-11-21 s → 1.15 s.
+It never plans an RDD (`df.rdd.getNumPartitions()` costs ~50 ms warm
+and ~1 s cold per call on 4 vCPUs; `inputFiles()` plus a footer read
+~2-4 ms). Footers are read with pyarrow, so the few-files branch needs
+a URI scheme pyarrow can open (file://, s3://, hdfs:// with libhdfs).
+Keyless round-robin repartition is retry-safe (Spark sorts before it
+by default, SPARK-23207) and changes no output.
+
+It is called where a consumer that won its own A/B loads its input
+(4 vCPUs, sf0.1 = one row group per table, median of 5 alternating
+pairs, with vs without the spread; CHANGES.md has all 16 former sites):
+- `binary_ops._codec_docs`, the Python codec queries:
+  multimodal_frame_sample 24.9 -> 8.2 s, decode_gif 6.6 -> 2.6 s,
+  codec_attest..5 1.6-3.6 -> 0.9-1.3 s, decode_png 1.39 -> 1.29 s;
+- dedup_embedding_cosine's streamed crossJoin side: 12.7 -> 3.9 s;
+- knn_bruteforce_cosine's streamed corpus side: 0.56 -> 0.46 s.
+ingestion_codec_attest and knn_random_projection did not win, and the
+payload generators no registered query reaches (wav, avi, jpeg,
+jpeg_color) are not spread.
 """
 
 from __future__ import annotations
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 
 
 def ensure_min_parallelism(df: DataFrame) -> DataFrame:
-    """Repartition `df` to the session default parallelism iff its
-    current plan has fewer partitions (see module docstring). Use on
-    the input of a stage whose per-row compute dominates a shuffle of
-    that input; never on cheap projections (the shuffle would cost
-    more than it spreads)."""
+    """Round-robin `df` over the session's default parallelism iff its
+    parquet scan has fewer files and fewer row groups than that (see
+    module docstring). Use on the load of a stage whose per-row compute
+    dominates a shuffle of its input, never on cheap projections."""
     p = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < p:
-        return df.repartition(p)
-    return df
+    files = df.inputFiles()
+    if len(files) >= p:
+        return df
+    if sum(pq.read_metadata(f).num_row_groups for f in files) >= p:
+        return df
+    return df.repartition(p)

@@ -29,15 +29,21 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..datamodel import load_table
-# Python-codec kernels must never run single-threaded just because the
-# input was one row group (frame_sample at sf0.1: 18 s → 2.1 s, output
-# identical) — see functions/layout.py.
-from ..functions.layout import ensure_min_parallelism as _spread
+from ..functions.layout import ensure_min_parallelism
 from . import avi, bmp, gif, ico, jpeg, png, pnm, qoi, wav
 
 DECODED_SCHEMA = (
     "doc_id long, n_bytes int, width int, height int, checksum long"
 )
+
+
+def _codec_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """`documents` as (doc_id, text), spread for the Python codec
+    kernels that consume it: they must not run on one core just because
+    the table is one row group (functions/layout.py)."""
+    return ensure_min_parallelism(
+        load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    )
 
 
 def with_binary_payload(docs: DataFrame) -> DataFrame:
@@ -337,7 +343,7 @@ def wav_payloads(docs: DataFrame) -> DataFrame:
                 {"doc_id": pdf["doc_id"].values, "payload": payloads}
             )
 
-    return _spread(docs.select("doc_id", "text")).mapInPandas(
+    return docs.select("doc_id", "text").mapInPandas(
         run, schema="doc_id long, payload binary"
     )
 
@@ -369,8 +375,7 @@ def q_multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyframe-extraction pipeline with an actual codec end-to-end
     (the byte-slicing `frame_sample` stand-in remains for codec-less
     formats). (rows-only: Pandas kernel, no SQL twin)"""
-    docs = load_table(spark, sf_dir, "documents")
-    return frame_sample_gif(gif_animation_payloads(docs))
+    return frame_sample_gif(gif_animation_payloads(_codec_docs(spark, sf_dir)))
 
 
 PNG_WIDTH = 16  # synthetic demo images: fixed stride, height from text
@@ -404,7 +409,7 @@ def png_payloads(docs: DataFrame) -> DataFrame:
                 {"doc_id": pdf["doc_id"].values, "payload": payloads}
             )
 
-    return _spread(docs.select("doc_id", "text")).mapInPandas(
+    return docs.select("doc_id", "text").mapInPandas(
         run, schema="doc_id long, payload binary"
     )
 
@@ -414,8 +419,7 @@ def q_multimodal_decode_png(spark: SparkSession, sf_dir: str) -> DataFrame:
     then decode it with the stdlib baseline-PNG codec (fake=False — the
     NotImplementedError gate stays armed for non-PNG bytes). [rows-only
     in the driver compare — Python-side kernel, no SQL twin]"""
-    docs = load_table(spark, sf_dir, "documents")
-    return decode_stub(png_payloads(docs), fake=False)
+    return decode_stub(png_payloads(_codec_docs(spark, sf_dir)), fake=False)
 
 
 def gif_payloads(docs: DataFrame) -> DataFrame:
@@ -437,7 +441,7 @@ def gif_payloads(docs: DataFrame) -> DataFrame:
                 {"doc_id": pdf["doc_id"].values, "payload": payloads}
             )
 
-    return _spread(docs.select("doc_id", "text")).mapInPandas(
+    return docs.select("doc_id", "text").mapInPandas(
         run, schema="doc_id long, payload binary"
     )
 
@@ -463,7 +467,7 @@ def gif_animation_payloads(docs: DataFrame, n_frames: int = 6) -> DataFrame:
                 {"doc_id": pdf["doc_id"].values, "payload": payloads}
             )
 
-    return _spread(docs.select("doc_id", "text")).mapInPandas(
+    return docs.select("doc_id", "text").mapInPandas(
         run, schema="doc_id long, payload binary"
     )
 
@@ -506,8 +510,7 @@ def q_multimodal_decode_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL-bytes GIF decode path: valid GIF89a per document, decoded
     by the stdlib LZW codec (fake=False). [rows-only in the driver
     compare — Python-side kernel, no SQL twin]"""
-    docs = load_table(spark, sf_dir, "documents")
-    return decode_stub(gif_payloads(docs), fake=False)
+    return decode_stub(gif_payloads(_codec_docs(spark, sf_dir)), fake=False)
 
 
 def avi_payloads(
@@ -560,7 +563,7 @@ def avi_payloads(
                 {"doc_id": pdf["doc_id"].values, "payload": payloads}
             )
 
-    return _spread(docs.select("doc_id", "text")).mapInPandas(
+    return docs.select("doc_id", "text").mapInPandas(
         run, schema="doc_id long, payload binary"
     )
 
@@ -621,7 +624,7 @@ def jpeg_payloads(docs: DataFrame, quality: int = 90) -> DataFrame:
                 {"doc_id": pdf["doc_id"].values, "payload": payloads}
             )
 
-    return _spread(docs.select("doc_id", "text")).mapInPandas(
+    return docs.select("doc_id", "text").mapInPandas(
         run, schema="doc_id long, payload binary"
     )
 
@@ -674,8 +677,7 @@ def q_multimodal_codec_attest(spark: SparkSession, sf_dir: str) -> DataFrame:
                 out["wav_energy"].append(sum(x * x for x in dec_wav))
             yield pd.DataFrame(out)
 
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    return _spread(docs).mapInPandas(run, schema=ATTEST_SCHEMA)
+    return _codec_docs(spark, sf_dir).mapInPandas(run, schema=ATTEST_SCHEMA)
 
 
 QUERIES = {
@@ -742,13 +744,13 @@ def jpeg_color_payloads(docs: DataFrame, quality: int = 90) -> DataFrame:
                 {"doc_id": pdf["doc_id"].values, "payload": payloads}
             )
 
-    return _spread(docs.select("doc_id", "text")).mapInPandas(
+    return docs.select("doc_id", "text").mapInPandas(
         run, schema="doc_id long, payload binary"
     )
 
 
 # ---------------------------------------------------------------------------
-# PREBUILT (r10-staged, NOT yet registered — tools/check_prebuilt.py).
+# Round-10 operators.
 # ---------------------------------------------------------------------------
 
 from . import tga  # noqa: E402
@@ -839,8 +841,7 @@ def q_multimodal_codec_attest2(
                 out["ico_sum"].append(wsum(dic))
             yield pd.DataFrame(out)
 
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    return _spread(docs).mapInPandas(run, schema=ATTEST2_SCHEMA)
+    return _codec_docs(spark, sf_dir).mapInPandas(run, schema=ATTEST2_SCHEMA)
 
 
 #: v_i (1-based i in 1..48) = ascii(md5 hex digit ((i-1) mod 32) + 1);
@@ -877,7 +878,7 @@ ORACLES["multimodal_codec_attest2"] = CODEC_ATTEST2_ORACLE
 
 
 # ---------------------------------------------------------------------------
-# PREBUILT (r11-staged, NOT yet registered — tools/check_prebuilt.py).
+# Round-11 operators.
 # ---------------------------------------------------------------------------
 
 ATTEST3_SCHEMA = (
@@ -963,8 +964,7 @@ def q_multimodal_codec_attest3(
                 )
             yield pd.DataFrame(out)
 
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    return _spread(docs).mapInPandas(run, schema=ATTEST3_SCHEMA)
+    return _codec_docs(spark, sf_dir).mapInPandas(run, schema=ATTEST3_SCHEMA)
 
 
 #: d_i (1-based i in 1..16) = VALUE of md5 hex digit i; decoded RGBA
@@ -1087,8 +1087,7 @@ def q_multimodal_codec_attest4(
                 out["pam_sum"].append(wsum(dpm))
             yield pd.DataFrame(out)
 
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    return _spread(docs).mapInPandas(run, schema=ATTEST4_SCHEMA)
+    return _codec_docs(spark, sf_dir).mapInPandas(run, schema=ATTEST4_SCHEMA)
 
 
 #: v_j (j in 1..48) = ascii(md5 hex char ((j-1) mod 32) + 1); d_i
@@ -1142,7 +1141,7 @@ ORACLES["multimodal_codec_attest4"] = CODEC_ATTEST4_ORACLE
 
 
 # ---------------------------------------------------------------------------
-# REGISTERED r13 (staged r12 via tools/check_prebuilt.py).
+# REGISTERED r13.
 # multimodal_codec_attest5: the attest discipline over the r12 codec
 # work — audio-first AVI stream resolution + wide-PCM WAV widths.
 # ---------------------------------------------------------------------------
@@ -1201,8 +1200,7 @@ def q_multimodal_codec_attest5(
                 out["pcm32_sum"].append(wsum(d32))
             yield pd.DataFrame(out)
 
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    return _spread(docs).mapInPandas(run, schema=ATTEST5_SCHEMA)
+    return _codec_docs(spark, sf_dir).mapInPandas(run, schema=ATTEST5_SCHEMA)
 
 
 #: v_j (j in 1..48) = ascii(md5 hex char ((j-1) mod 32) + 1).
@@ -1225,13 +1223,13 @@ SELECT doc_id,
                      ELSE 0 END) AS BIGINT) AS pcm32_sum
 FROM v GROUP BY doc_id"""
 
-# registered r13 (staged r12 via tools/check_prebuilt.py)
+# registered r13
 QUERIES["multimodal_codec_attest5"] = q_multimodal_codec_attest5
 ORACLES["multimodal_codec_attest5"] = CODEC_ATTEST5_ORACLE
 
 
 # ---------------------------------------------------------------------------
-# PREBUILT (r13-staged for r14 — tools/check_prebuilt.py).
+# Round-13 operators.
 # ingestion_codec_attest: the attest discipline over the raw-file
 # ingestion source — md5-derived PCM encoded to REAL files on disk,
 # ingested back through read_binary_files, decoded, and checksummed
@@ -1306,7 +1304,7 @@ def q_ingestion_codec_attest(
             yield pd.DataFrame({"n": [len(pdf)]})
 
     # force the write pass exactly once (bounded 1-row collect)
-    _spread(docs).mapInPandas(write, schema="n long").agg(F.sum("n")).collect()
+    docs.mapInPandas(write, schema="n long").agg(F.sum("n")).collect()
 
     ing = read_binary_files(spark, d, glob="*.wav").select(
         F.regexp_extract("path", "([0-9]+)[.]wav$", 1)

@@ -1100,11 +1100,9 @@ def q_dedup_embedding_cosine(
 
     v = as_double_vec(F.col("embedding"))
     e = emb.select("vec_id", v.alias("v"), norm(v).alias("nrm"))
-    # r20 (guide §2.5): the crossJoin STREAMS the left side, so a
-    # single-row-group scan pins the whole O(n^2) interpreted-fold
-    # pass to one task — spread it before the fan-out (measured
-    # 11-21 s → 1.15 s at sf0.1, output identical; no-op on any
-    # already-parallel layout).
+    # the crossJoin streams its left side: spread it before the O(n^2)
+    # fan-out when the scan has too few row groups (functions/layout.py;
+    # 12.7 -> 3.9 s at sf0.1 on 4 vCPUs)
     e1 = ensure_min_parallelism(
         e.select(
             F.col("vec_id").alias("vec_id_1"), F.col("v").alias("v1"),
@@ -2447,9 +2445,8 @@ LEFT JOIN hits ON hits.doc_id_1 = pairs.doc_id_1
               AND hits.doc_id_2 = pairs.doc_id_2"""
 
 
-# --- Round-6 registrations: prebuilt catalog drained into the driver
-# --- contract (queries()/oracle_sql()); locally proven green by
-# --- tools/check_prebuilt.py through round 5.
+# --- Round-6 registrations into the driver contract
+# --- (queries()/oracle_sql()).
 QUERIES["dedup_containment"] = dedup_containment
 ORACLES["dedup_containment"] = CONTAINMENT_ORACLE
 QUERIES["lsh_recall_audit"] = lsh_recall_audit
@@ -2485,7 +2482,7 @@ def dedup_cluster_size_histogram(
     tail is template/boilerplate mass worth a human look (the k-core
     question, answered cheaply). Composes the proven CC labeling
     (q_dedup_clusters) with two tiny rollups. Registered in round 6
-    (staged through check_prebuilt first). ``pairs_fn`` forwards to
+   . ``pairs_fn`` forwards to
     q_dedup_clusters (the 100 TB path rides the 120-bit relation)."""
     labels = q_dedup_clusters(spark, sf_dir, pairs_fn=pairs_fn)
     sizes = labels.groupBy("cluster_id").agg(
@@ -2564,7 +2561,7 @@ ORACLES["dedup_minhash_index_probe"] = ORACLES["dedup_incremental_minhash"]
 
 
 # ---------------------------------------------------------------------------
-# PREBUILT (r8-staged, NOT yet registered — tools/check_prebuilt.py).
+# Round-8 operators.
 # ---------------------------------------------------------------------------
 
 def pair_rate_matrix(
@@ -2672,8 +2669,7 @@ def source_dup_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair (the registered dedup_minhash_lsh relation, tau=0.8) is
     labeled with its two documents' sources and rolled up by
     pair_rate_matrix; a cell whose dup_ppm is an outlier against the
-    matrix is a provider shipping recycled content. Prebuilt r8
-    (staged in tools/check_prebuilt.py)."""
+    matrix is a provider shipping recycled content. Added in round 8."""
     pairs = q_dedup_minhash_lsh(spark, sf_dir).select(
         "doc_id_1", "doc_id_2"
     )
@@ -2925,7 +2921,7 @@ ORACLES["source_token_yield"] = SOURCE_TOKEN_YIELD_ORACLE
 
 
 # ---------------------------------------------------------------------------
-# PREBUILT (r10-staged, NOT yet registered — tools/check_prebuilt.py).
+# Round-10 operators.
 # ---------------------------------------------------------------------------
 
 #: source trust rank: the numeric suffix of the synthetic src{N}
@@ -3056,7 +3052,7 @@ ORACLES["dedup_cluster_keep_priority"] = CLUSTER_KEEP_PRIORITY_ORACLE
 
 
 # ---------------------------------------------------------------------------
-# PREBUILT (r11-staged, NOT yet registered — tools/check_prebuilt.py).
+# Round-11 operators.
 # ---------------------------------------------------------------------------
 
 #: rows-per-band configurations swept by dedup_minhash_band_sweep —
@@ -3384,7 +3380,7 @@ ORACLES["dedup_shingle_cap_sweep"] = SHINGLE_CAP_SWEEP_ORACLE
 
 
 # ---------------------------------------------------------------------------
-# REGISTERED r13 (staged r12 via tools/check_prebuilt.py).
+# REGISTERED r13.
 # dedup_cosine_tau_sweep: the semantic-dedup threshold curve.
 # ---------------------------------------------------------------------------
 
@@ -3511,7 +3507,7 @@ COSINE_TAU_SWEEP_ORACLE = _cosine_tau_sweep_oracle()
 
 
 # ---------------------------------------------------------------------------
-# REGISTERED r13 (staged r12 via tools/check_prebuilt.py).
+# REGISTERED r13.
 # dedup_simhash_radius_sweep: the hamming-radius curve.
 # ---------------------------------------------------------------------------
 
@@ -3618,7 +3614,7 @@ SIMHASH_RADIUS_SWEEP_ORACLE = _radius_sweep_oracle_sql(
     ORACLES["dedup_simhash_pairs"], _SRS_NS
 )
 
-# registered r13 (staged r12 via tools/check_prebuilt.py)
+# registered r13
 QUERIES["dedup_cosine_tau_sweep"] = dedup_cosine_tau_sweep
 ORACLES["dedup_cosine_tau_sweep"] = COSINE_TAU_SWEEP_ORACLE
 QUERIES["dedup_simhash_radius_sweep"] = dedup_simhash_radius_sweep
@@ -3626,7 +3622,7 @@ ORACLES["dedup_simhash_radius_sweep"] = SIMHASH_RADIUS_SWEEP_ORACLE
 
 
 # ---------------------------------------------------------------------------
-# PREBUILT (r13-staged for r14 — tools/check_prebuilt.py).
+# Round-13 operators.
 # dedup_minhash_perm_sweep: signature width vs estimator accuracy.
 # ---------------------------------------------------------------------------
 

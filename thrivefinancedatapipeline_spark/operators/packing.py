@@ -235,7 +235,7 @@ ORACLES["pack_chunks"] = _pack_chunks_oracle()
 
 
 # ---------------------------------------------------------------------------
-# PREBUILT (r7-staged, NOT yet registered — tools/check_prebuilt.py).
+# Round-7 operators.
 # ---------------------------------------------------------------------------
 
 def packing_efficiency(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -246,7 +246,7 @@ def packing_efficiency(spark: SparkSession, sf_dir: str) -> DataFrame:
     need document-boundary resets; a packing plan is judged by high
     fill and few crossers). Derived entirely from the proven
     pack_sequences assignment, so the audit and the plan can never
-    disagree. Prebuilt r7 (tools/check_prebuilt.py).
+    disagree. Added in round 7.
 
     Scale shape: one per-language rollup over the packing output —
     the assignment's ranged prefix sum remains the only heavy pass."""
@@ -314,8 +314,7 @@ SELECT lang,
 FROM asg GROUP BY lang"""
 
 
-# Registered r8 (staged r7 behind tools/check_prebuilt.py, gate-green
-# and two-SF pinned in tests/test_prebuilt_r8.py before promotion).
+# Registered r8 (two-SF pinned in tests/test_prebuilt_r8.py).
 QUERIES["packing_efficiency"] = packing_efficiency
 ORACLES["packing_efficiency"] = PACKING_EFFICIENCY_ORACLE
 
@@ -598,7 +597,7 @@ ORACLES["source_token_cost_drift"] = TOKEN_COST_DRIFT_ORACLE
 
 
 # ---------------------------------------------------------------------------
-# PREBUILT (r11-staged, NOT yet registered — tools/check_prebuilt.py).
+# Round-11 operators.
 # ---------------------------------------------------------------------------
 
 #: context-window budgets swept by pack_budget_sweep — the registered

@@ -396,9 +396,8 @@ def observe_ingest_quality(df: DataFrame, name: str = "ingest_quality"):
     return observed, obs
 
 
-# --- Round-6 registrations: prebuilt catalog drained into the driver
-# --- contract (queries()/oracle_sql()); locally proven green by
-# --- tools/check_prebuilt.py through round 5.
+# --- Round-6 registrations into the driver contract
+# --- (queries()/oracle_sql()).
 QUERIES["benford_audit"] = benford_audit
 ORACLES["benford_audit"] = BENFORD_ORACLE
 
@@ -527,7 +526,7 @@ ORACLES["source_curation_funnel"] = CURATION_FUNNEL_ORACLE
 
 
 # ---------------------------------------------------------------------------
-# REGISTERED r13 (staged r12 via tools/check_prebuilt.py).
+# REGISTERED r13.
 # corpus_pipeline_attest: the fused END-TO-END pipeline attest — every
 # funnel stage run_corpus_pipeline composes, as ONE oracled relation.
 # ---------------------------------------------------------------------------
@@ -803,7 +802,7 @@ PIPELINE_ATTEST_ORACLE = _pipeline_attest_oracle()
 
 
 # ---------------------------------------------------------------------------
-# REGISTERED r13 (staged r12 via tools/check_prebuilt.py).
+# REGISTERED r13.
 # quality_gate_margin_sweep: the per-language strictness curve.
 # ---------------------------------------------------------------------------
 
@@ -926,7 +925,7 @@ GATE_MARGIN_SWEEP_ORACLE = _gate_margin_sweep_oracle()
 
 
 # ---------------------------------------------------------------------------
-# REGISTERED r13 (staged r12 via tools/check_prebuilt.py).
+# REGISTERED r13.
 # corpus_pipeline_attest_prod: the PRODUCTION-posture pipeline attest.
 # ---------------------------------------------------------------------------
 
@@ -1237,7 +1236,7 @@ FROM packed"""
 
 PIPELINE_ATTEST_PROD_ORACLE = _pipeline_attest_prod_oracle()
 
-# registered r13 (staged r12 via tools/check_prebuilt.py)
+# registered r13
 QUERIES["corpus_pipeline_attest"] = corpus_pipeline_attest
 ORACLES["corpus_pipeline_attest"] = PIPELINE_ATTEST_ORACLE
 QUERIES["corpus_pipeline_attest_prod"] = corpus_pipeline_attest_prod

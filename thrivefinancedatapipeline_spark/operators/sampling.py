@@ -281,7 +281,7 @@ FROM sel WHERE rank <= {RESERVOIR_K}"""
 
 
 # ---------------------------------------------------------------------------
-# PREBUILT (r7-staged, NOT yet registered — tools/check_prebuilt.py).
+# Round-7 operators.
 # ---------------------------------------------------------------------------
 
 def split_balance_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -292,7 +292,7 @@ def split_balance_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     val split whose vocabulary profile drifts from the corpus will
     mis-rank every checkpoint). The token-level sibling of
     corpus_source_drift's length-profile TV, over the hash-stable
-    split_column assignment. Prebuilt r7 (tools/check_prebuilt.py).
+    split_column assignment. Added in round 7.
 
     Exactness: common-denominator integers |n_st*N - n_t*N_s| summed
     in DECIMAL(38,0), one truncating div by 2*N_s*N — no logs, no
@@ -384,13 +384,13 @@ SELECT split,
 FROM j GROUP BY split"""
 
 
-# Registered r8 (staged r7 behind tools/check_prebuilt.py).
+# Registered r8.
 QUERIES["split_balance_audit"] = split_balance_audit
 ORACLES["split_balance_audit"] = SPLIT_BALANCE_ORACLE
 
 
 # ---------------------------------------------------------------------------
-# PREBUILT (r8-staged, NOT yet registered — tools/check_prebuilt.py).
+# Round-8 operators.
 # ---------------------------------------------------------------------------
 
 def split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -402,7 +402,7 @@ def split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     split-count audit uses — the audit and the split can never
     disagree) and rolled up by dedup.pair_rate_matrix; the
     (train, val) / (train, test) cells ARE the leakage number.
-    Prebuilt r8 (staged in tools/check_prebuilt.py)."""
+    Added in round 8."""
     from .dedup import pair_rate_matrix, q_dedup_minhash_lsh
 
     pairs = q_dedup_minhash_lsh(spark, sf_dir).select(
@@ -498,7 +498,7 @@ ORACLES["quality_split_drift"] = _quality_split_drift_oracle()
 
 
 # ---------------------------------------------------------------------------
-# PREBUILT (r10-staged, NOT yet registered — tools/check_prebuilt.py).
+# Round-10 operators.
 # ---------------------------------------------------------------------------
 
 #: assembly budget = total corpus tokens div QUOTA_DENOM, split as an
@@ -628,7 +628,7 @@ ORACLES["source_quota_sampler"] = QUOTA_SAMPLER_ORACLE
 
 
 # ---------------------------------------------------------------------------
-# PREBUILT (r11-staged, NOT yet registered — tools/check_prebuilt.py).
+# Round-11 operators.
 # ---------------------------------------------------------------------------
 
 #: assembly-budget denominators swept by quota_denom_sweep — the

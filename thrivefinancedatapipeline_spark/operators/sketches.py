@@ -1122,8 +1122,7 @@ def events_pareto_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     events the top {PARETO_TOP_PCT}% of users generate — the
     one-number skew summary next to join_key_skew's per-key table
     (a high share says the workload concentrates on few keys; feeds
-    the same salting decision). Registered in round 6 (staged
-    through check_prebuilt first).
+    the same salting decision). Registered in round 6.
 
     Scale shape: per-user counts (one map-side-combinable shuffle),
     then rank AND running event total in ONE two-phase ranged scan
@@ -1196,7 +1195,7 @@ ORACLES["events_pareto_share"] = PARETO_ORACLE
 
 
 # ---------------------------------------------------------------------------
-# PREBUILT (r7-staged, NOT yet registered — tools/check_prebuilt.py).
+# Round-7 operators.
 # ---------------------------------------------------------------------------
 
 SRC_KMV_K = 64  # sketch size per source for the pairwise Jaccard
@@ -1212,7 +1211,7 @@ def source_jaccard_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     take the k smallest of the union, count how many live in both
     sketches). Deterministic md5 hash space end to end, so the sketch
     — and therefore the estimate — is bit-identical in both engines.
-    Prebuilt r7 (staged in tools/check_prebuilt.py).
+    Added in round 7.
 
     Scale shape: one distinct-reduce on (source, hash) — map-side
     combinable, the only pass over raw shingles — then per-source
@@ -1301,13 +1300,13 @@ SELECT k.source_a, k.source_b,
 FROM ku k LEFT JOIN ovl o USING (source_a, source_b)"""
 
 
-# Registered r8 (staged r7 behind tools/check_prebuilt.py).
+# Registered r8.
 QUERIES["source_jaccard_kmv"] = source_jaccard_kmv
 ORACLES["source_jaccard_kmv"] = SOURCE_JACCARD_KMV_ORACLE
 
 
 # ---------------------------------------------------------------------------
-# PREBUILT (r8-staged, NOT yet registered — tools/check_prebuilt.py).
+# Round-8 operators.
 # ---------------------------------------------------------------------------
 
 SRC_DRIFT_K = 48  # per-(source, period) sketch size — cells are smaller
@@ -1331,8 +1330,7 @@ def source_jaccard_drift(
     same plan runs with `div 7` on the period expression (the
     cohort_ltv convention) and nothing else changes. Shingle hashing
     is the deterministic md5 space, so the sketch and the estimate
-    are bit-identical across engines. Prebuilt r8 (staged in
-    tools/check_prebuilt.py).
+    are bit-identical across engines. Added in round 8.
 
     Scale shape: ONE distinct-reduce on (source, period, hash) is the
     only pass over corpus-scale shingles (map-side combinable); the

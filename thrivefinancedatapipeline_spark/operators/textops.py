@@ -1671,9 +1671,8 @@ SELECT source,
 FROM m GROUP BY source"""
 
 
-# --- Round-6 registrations: prebuilt catalog drained into the driver
-# --- contract (queries()/oracle_sql()); locally proven green by
-# --- tools/check_prebuilt.py through round 5.
+# --- Round-6 registrations into the driver contract
+# --- (queries()/oracle_sql()).
 QUERIES["corpus_bigram_coverage"] = corpus_bigram_coverage
 ORACLES["corpus_bigram_coverage"] = BIGRAM_COVERAGE_ORACLE
 QUERIES["pii_scan_redact"] = pii_scan_redact
@@ -2043,7 +2042,7 @@ FROM m"""
 
 
 # ---------------------------------------------------------------------------
-# PREBUILT (r8-staged, NOT yet registered — tools/check_prebuilt.py).
+# Round-8 operators.
 # ---------------------------------------------------------------------------
 
 LEN_MAD_K = 3  # robust outlier threshold: dev > LEN_MAD_K * MAD
@@ -2058,7 +2057,7 @@ def doc_length_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     Medians are EXACT ELEMENTS (lower median at rank (n+1) div 2),
     MAD the exact-rank median of |len - med|, the flag an integer
     compare — replayable in both engines with no floats anywhere.
-    Prebuilt r8 (staged in tools/check_prebuilt.py).
+    Added in round 8.
 
     Scale shape: documents first reduce to (lang, n_chars, count)
     CELLS — one map-side-combinable groupBy is the only corpus-scale
@@ -2482,7 +2481,7 @@ def probe_chunk_band_index(
 
 
 # ---------------------------------------------------------------------------
-# REGISTERED r13 (staged r12 via tools/check_prebuilt.py).
+# REGISTERED r13.
 # decontam_threshold_sweep + repeat_cap_sweep: the hygiene and
 # epoch-policy knobs, each costed from one pass.
 # ---------------------------------------------------------------------------
@@ -2820,7 +2819,7 @@ FROM k GROUP BY 1, 2"""
 
 CHUNK_SIZE_SWEEP_ORACLE = _chunk_size_sweep_oracle()
 
-# registered r13 (staged r12 via tools/check_prebuilt.py)
+# registered r13
 QUERIES["decontam_threshold_sweep"] = decontam_threshold_sweep
 ORACLES["decontam_threshold_sweep"] = DECON_SWEEP_ORACLE
 QUERIES["repeat_cap_sweep"] = repeat_cap_sweep
@@ -2830,7 +2829,7 @@ ORACLES["corpus_chunk_size_sweep"] = CHUNK_SIZE_SWEEP_ORACLE
 
 
 # ---------------------------------------------------------------------------
-# PREBUILT (r13-staged for r14 — tools/check_prebuilt.py).
+# Round-13 operators.
 # mixture_temperature_sweep: the temperature knob on mixture weights.
 # ---------------------------------------------------------------------------
 
@@ -2929,7 +2928,7 @@ ORACLES["mixture_temperature_sweep"] = MIXTURE_TEMP_SWEEP_ORACLE
 
 
 # ---------------------------------------------------------------------------
-# PREBUILT (r13-staged for r14 — tools/check_prebuilt.py).
+# Round-13 operators.
 # ingestion_text_attest: the same end-to-end discipline over the
 # wholetext corpus source — documents written to REAL files under TWO
 # shard directories, ingested back through read_text_corpus, and
@@ -3073,7 +3072,7 @@ ORACLES["ingestion_text_attest"] = INGEST_TEXT_ATTEST_ORACLE
 
 
 # ---------------------------------------------------------------------------
-# PREBUILT (r13-staged for r14 — tools/check_prebuilt.py).
+# Round-13 operators.
 # ingestion_stream_attest: the end-to-end oracle over the LAST
 # ingestion path without one — the STREAMING JSONL source. Documents
 # are exported as real JSONL drop files, re-ingested through

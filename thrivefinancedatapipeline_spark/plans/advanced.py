@@ -1062,9 +1062,8 @@ FROM pairs
 QUALIFY rank <= {BASKET_TOP_K}"""
 
 
-# --- Round-6 registrations: prebuilt catalog drained into the driver
-# --- contract (queries()/oracle_sql()); locally proven green by
-# --- tools/check_prebuilt.py through round 5.
+# --- Round-6 registrations into the driver contract
+# --- (queries()/oracle_sql()).
 QUERIES["weighted_median_price"] = weighted_median_price
 ORACLES["weighted_median_price"] = WEIGHTED_MEDIAN_ORACLE
 QUERIES["part_abc_classification"] = part_abc_classification

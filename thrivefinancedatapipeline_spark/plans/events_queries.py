@@ -1647,9 +1647,8 @@ def hour_cells(events_df: DataFrame) -> DataFrame:
     ).agg(F.count(F.lit(1)).alias("o"))
 
 
-# --- Round-6 registrations: prebuilt catalog drained into the driver
-# --- contract (queries()/oracle_sql()); locally proven green by
-# --- tools/check_prebuilt.py through round 5.
+# --- Round-6 registrations into the driver contract
+# --- (queries()/oracle_sql()).
 QUERIES["events_seasonal_decompose"] = events_seasonal_decompose
 ORACLES["events_seasonal_decompose"] = SEASONAL_ORACLE
 QUERIES["events_robust_anomalies"] = events_robust_anomalies
@@ -1679,8 +1678,7 @@ def events_session_depth_histogram(spark: SparkSession, sf_dir: str) -> DataFram
     (1 / 2-3 / 4-7 / 8-15 / 16+) with session and event totals per
     bucket — the first chart a product team draws over sessionized
     traffic. Composes the proven sessionize pass (one user_id
-    shuffle) with a tiny 5-bucket rollup. Registered in round 6 (staged
-    through check_prebuilt first)."""
+    shuffle) with a tiny 5-bucket rollup. Registered in round 6."""
     s = sessionize(load_table(spark, sf_dir, "events"))
     bucket = (
         F.when(F.col("n_events") <= 1, F.lit("1"))
@@ -1735,7 +1733,7 @@ ORACLES["events_session_depth_histogram"] = SESSION_DEPTH_ORACLE
 
 
 # ---------------------------------------------------------------------------
-# PREBUILT (r7-staged, NOT yet registered — tools/check_prebuilt.py).
+# Round-7 operators.
 # ---------------------------------------------------------------------------
 
 def events_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1746,7 +1744,7 @@ def events_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     to (day, user) pairs, bounded fan-out to window ends — never a
     range self-join; at 100 TB swap the exact distinct for the KMV
     merge twin exactly as events_rolling_distinct_users documents).
-    Prebuilt r7 (staged in tools/check_prebuilt.py)."""
+    Added in round 7."""
     ev = load_table(spark, sf_dir, "events")
     daily = ev.select(F.to_date("ts").alias("d"), "user_id").distinct()
     days = daily.select("d").distinct()
@@ -1797,6 +1795,6 @@ SELECT strftime(dau.d, '%Y-%m-%d') AS day,
 FROM dau JOIN wau ON dau.d = wau.d"""
 
 
-# Registered r8 (staged r7 behind tools/check_prebuilt.py).
+# Registered r8.
 QUERIES["events_stickiness"] = events_stickiness
 ORACLES["events_stickiness"] = STICKINESS_ORACLE

@@ -1063,9 +1063,8 @@ SELECT cells.cohort_week, cells.age_weeks,
 FROM cells JOIN size_ USING (cohort_week)"""
 
 
-# --- Round-6 registrations: prebuilt catalog drained into the driver
-# --- contract (queries()/oracle_sql()); locally proven green by
-# --- tools/check_prebuilt.py through round 5.
+# --- Round-6 registrations into the driver contract
+# --- (queries()/oracle_sql()).
 QUERIES["overdraft_flags"] = overdraft_flags
 ORACLES["overdraft_flags"] = OVERDRAFT_ORACLE
 QUERIES["balance_snapshot_diff"] = balance_snapshot_diff
@@ -1081,7 +1080,7 @@ def customer_inactivity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     transaction as of the catalog ASOF date — the inactivity
     companion of balance_aging (that one ages unredeemed VALUE; this
     one ages the customer relationship). One groupBy over the
-    transaction stream + a tiny 4-bucket rollup. Registered in round 6 (staged through check_prebuilt first)."""
+    transaction stream + a tiny 4-bucket rollup. Registered in round 6."""
     txns = _txns(spark, sf_dir)
     last = (
         txns.filter(
@@ -1136,8 +1135,7 @@ ORACLES["customer_inactivity_buckets"] = INACTIVITY_ORACLE
 
 
 # ---------------------------------------------------------------------------
-# PREBUILT (r7-staged, NOT yet registered — tools/check_prebuilt.py
-# gates these until a future round's registration window has room).
+# Round-7 operators.
 # ---------------------------------------------------------------------------
 
 def time_weighted_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1145,7 +1143,7 @@ def time_weighted_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     [first transaction, ASOF) — the creditworthiness/interest-accrual
     metric the reference's balance catalog lacks: a customer who held
     900 for three weeks ranks above one who spiked to 1000 for an
-    hour. Prebuilt r7 (staged in tools/check_prebuilt.py).
+    hour. Added in round 7.
 
     Exactness: balance deltas in half-up integer cents (the rfm
     convention), segment durations in exact epoch MICROS
@@ -1241,13 +1239,13 @@ SELECT customerid AS customer_id,
 FROM seg GROUP BY customerid"""
 
 
-# Registered r8 (staged r7 behind tools/check_prebuilt.py).
+# Registered r8.
 QUERIES["time_weighted_balance"] = time_weighted_balance
 ORACLES["time_weighted_balance"] = TWAB_ORACLE
 
 
 # ---------------------------------------------------------------------------
-# PREBUILT (r8-staged, NOT yet registered — tools/check_prebuilt.py).
+# Round-8 operators.
 # ---------------------------------------------------------------------------
 
 def balance_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1258,8 +1256,7 @@ def balance_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     drawdown even if they later recover). Surfaces burn-and-churn
     behavior the level-based catalog (aging, TWAB, RFM) can't see.
     Exact integer cents end-to-end; drawdown_ppm = max_dd x 1e6 div
-    peak (0 when the balance never went positive). Prebuilt r8
-    (staged in tools/check_prebuilt.py).
+    peak (0 when the balance never went positive). Added in round 8.
 
     Scale shape: ONE exchange+sort per customer serves BOTH window
     phases — the running-sum balance and the running max over it
@@ -1353,7 +1350,7 @@ def balance_concentration_by_segment(
     cent-shares: hhi_ppb = sum(bal^2) x 1e9 div total^2, 1e9 =
     monopoly) plus the top-holder share, over customers with a
     POSITIVE final balance (shares are undefined on a mixed-sign
-    base). Prebuilt r8 (staged in tools/check_prebuilt.py).
+    base). Added in round 8.
 
     Scale shape: one map-side-combinable per-customer fold over
     transactions (the only corpus-scale pass), a broadcast join to
@@ -1607,7 +1604,7 @@ ORACLES["balance_bucket_migration"] = BUCKET_MIGRATION_ORACLE
 
 
 # ---------------------------------------------------------------------------
-# PREBUILT (r10-staged, NOT yet registered — tools/check_prebuilt.py).
+# Round-10 operators.
 # ---------------------------------------------------------------------------
 
 #: velocity screen: trailing windows (seconds) and the integer burst
@@ -1700,7 +1697,7 @@ ORACLES["txn_velocity_flags"] = VELOCITY_ORACLE
 
 
 # ---------------------------------------------------------------------------
-# PREBUILT (r11-staged, NOT yet registered — tools/check_prebuilt.py).
+# Round-11 operators.
 # ---------------------------------------------------------------------------
 
 #: burst-rate multipliers swept by velocity_rate_sweep — the

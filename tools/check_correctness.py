@@ -14,7 +14,13 @@ import sys
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, ".")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+# Spark's Python workers import the package too; they see PYTHONPATH,
+# not this process's sys.path
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+)
 
 #: the driver checks at sf0.01; override for off-nominal sweeps
 #: (sf0.001 exercises empty/degenerate cells, sf0.1 the scale shapes)
@@ -47,10 +53,10 @@ def frame_hash(df: pd.DataFrame) -> str:
 def compare_frames(sdf: pd.DataFrame, odf: pd.DataFrame) -> list:
     """The driver's t2 compare: row count + column set + value hash.
 
-    Single source of truth for this tool, check_prebuilt, and
-    scaleup_gate (they used to carry hand-rolled copies that drifted
-    in when the hash check was skipped). The hash is only skipped when
-    the column sets differ — rows can't be aligned for hashing then.
+    Single source of truth for this tool and scaleup_gate (they used
+    to carry hand-rolled copies that drifted in when the hash check
+    was skipped). The hash is only skipped when the column sets
+    differ — rows can't be aligned for hashing then.
     """
     problems = []
     if len(sdf) != len(odf):
@@ -93,7 +99,7 @@ def main() -> int:
     unknown = only - set(qs)
     if unknown:
         # a typo'd (or unregistered) name must NOT report
-        # green-by-vacuity — the check_prebuilt guard, here too
+        # green-by-vacuity
         print(f"ERROR: not in the registered catalog: {sorted(unknown)}")
         return 1
     failures = 0

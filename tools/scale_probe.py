@@ -12,10 +12,17 @@ detonate at cluster scale — this probe is how we catch it early.
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, ".")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+# Spark's Python workers import the package too; they see PYTHONPATH,
+# not this process's sys.path
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+)
 
 SF_DIRS = {
     "0.001": "/root/testdata/sf0.001",

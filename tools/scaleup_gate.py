@@ -53,7 +53,13 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, ".")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+# Spark's Python workers import the package too; they see PYTHONPATH,
+# not this process's sys.path
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+)
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from check_correctness import TABLES, compare_frames  # noqa: E402
@@ -294,7 +300,6 @@ def main() -> None:
 
     # validate names BEFORE paying the SparkSession spin-up: only the
     # query registry is needed for the green-by-vacuity guard
-    # (check_prebuilt rule; r17 ADVICE)
     qs = {**entrymod.queries(), **_extra_probes()}
     oracles = entrymod.oracle_sql()
     unknown = sorted(
@@ -418,10 +423,7 @@ def main() -> None:
                 graph_fails += 0 if gp[name]["match"] else 1
         print(json.dumps(result))
         if rnd is not None:
-            path = os.path.join(
-                os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                f"SCALEUP_r{rnd}.json",
-            )
+            path = os.path.join(ROOT, f"SCALEUP_r{rnd}.json")
             with open(path, "w") as f:
                 json.dump(result, f, indent=1)
             print(f"wrote {path}", file=sys.stderr)
