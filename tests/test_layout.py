@@ -59,10 +59,21 @@ def test_enough_files_read_no_footer(layouts, monkeypatch):
     df = layouts["many_files"]
     _no_rdd(monkeypatch, df)
 
-    def no_footer(*_a, **_k):
-        raise AssertionError("read a footer for an already spread scan")
+    class NoJvm:
+        def __getattr__(self, name):
+            raise AssertionError("read a footer for an already spread scan")
 
-    monkeypatch.setattr(layout.pq, "read_metadata", no_footer)
+    monkeypatch.setattr(df.sparkSession, "_jvm", NoJvm())
+    assert layout.ensure_min_parallelism(df) is df
+
+
+def test_unreadable_footer_leaves_the_plan_alone(spark, tmp_path, monkeypatch):
+    """One file, so the footer is read; it is not parquet, so the read
+    raises in the JVM and the decision keeps the plan as it is."""
+    (tmp_path / "one.csv").write_text("id,v\n1,0.5\n2,1.0\n")
+    df = spark.read.csv(str(tmp_path / "one.csv"), header=True)
+    _no_rdd(monkeypatch, df)
+    assert len(df.inputFiles()) < spark.sparkContext.defaultParallelism
     assert layout.ensure_min_parallelism(df) is df
 
 

@@ -1,24 +1,20 @@
 """Input-layout repair: minimum parallelism for compute-heavy stages.
 
 A parquet input written as one file with one row group (the sf-dir
-layout, and in production any table written by a non-Spark writer
-with a huge row group) caps its scan at one busy task whatever the
-cluster size: `maxPartitionBytes` cannot split inside a row group. A
-stage whose per-row work dwarfs a shuffle of its input (Python codec
-kernels, all-pairs interpreted vector folds) then runs on one core.
+layout; in production, any table a non-Spark writer wrote with a huge
+row group) scans as one task whatever the cluster size, so a stage
+whose per-row work dwarfs a shuffle of its input (Python codec
+kernels, all-pairs vector folds) runs on one core.
 
-`ensure_min_parallelism` decides from the scan's layout alone:
-- at least `defaultParallelism` input files: the scan is already
-  spread, so the plan is left alone and no footer is read;
-- otherwise the parquet footers' row groups are summed, and only a
-  sum below `defaultParallelism` adds one round-robin exchange.
-
-It never plans an RDD (`df.rdd.getNumPartitions()` costs ~50 ms warm
-and ~1 s cold per call on 4 vCPUs; `inputFiles()` plus a footer read
-~2-4 ms). Footers are read with pyarrow, so the few-files branch needs
-a URI scheme pyarrow can open (file://, s3://, hdfs:// with libhdfs).
-Keyless round-robin repartition is retry-safe (Spark sorts before it
-by default, SPARK-23207) and changes no output.
+`ensure_min_parallelism` decides from the scan's layout alone: with at
+least `defaultParallelism` input files it reads nothing and leaves the
+plan alone; otherwise it sums the footers' row groups (Spark's own
+parquet-hadoop reader, so any scheme the scan reads works), stopping
+at `defaultParallelism`, and only a smaller sum adds one round-robin
+exchange. A footer that cannot be read leaves the plan alone. It never
+plans an RDD (`df.rdd.getNumPartitions()` costs ~50 ms warm and ~1 s
+cold on 4 vCPUs; this decision 10-30 ms warm). Keyless round-robin is
+retry-safe (SPARK-23207) and changes no output.
 
 It is called where a consumer that won its own A/B loads its input
 (4 vCPUs, sf0.1 = one row group per table, median of 5 alternating
@@ -35,7 +31,7 @@ jpeg_color) are not spread.
 
 from __future__ import annotations
 
-import pyarrow.parquet as pq
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame
 
 
@@ -44,10 +40,24 @@ def ensure_min_parallelism(df: DataFrame) -> DataFrame:
     parquet scan has fewer files and fewer row groups than that (see
     module docstring). Use on the load of a stage whose per-row compute
     dominates a shuffle of its input, never on cheap projections."""
-    p = df.sparkSession.sparkContext.defaultParallelism
+    spark = df.sparkSession
+    p = spark.sparkContext.defaultParallelism
     files = df.inputFiles()
     if len(files) >= p:
         return df
-    if sum(pq.read_metadata(f).num_row_groups for f in files) >= p:
-        return df
+    jvm = spark._jvm
+    conf = spark._jsc.hadoopConfiguration()
+    parquet = jvm.org.apache.parquet
+    no_filter = parquet.format.converter.ParquetMetadataConverter.NO_FILTER
+    groups = 0
+    for f in files:
+        try:
+            footer = parquet.hadoop.ParquetFileReader.readFooter(
+                conf, jvm.org.apache.hadoop.fs.Path(f), no_filter
+            )
+        except Py4JJavaError:  # not parquet, or unreadable: leave it
+            return df
+        groups += footer.getBlocks().size()
+        if groups >= p:
+            return df
     return df.repartition(p)

@@ -2481,9 +2481,9 @@ def dedup_cluster_size_histogram(
     document totals per bucket — singletons are unique docs, the 9+
     tail is template/boilerplate mass worth a human look (the k-core
     question, answered cheaply). Composes the proven CC labeling
-    (q_dedup_clusters) with two tiny rollups. Registered in round 6
-   . ``pairs_fn`` forwards to
-    q_dedup_clusters (the 100 TB path rides the 120-bit relation)."""
+    (q_dedup_clusters) with two tiny rollups. Registered in round 6.
+    ``pairs_fn`` forwards to q_dedup_clusters (the 100 TB path rides
+    the 120-bit relation)."""
     labels = q_dedup_clusters(spark, sf_dir, pairs_fn=pairs_fn)
     sizes = labels.groupBy("cluster_id").agg(
         F.count(F.lit(1)).alias("n")

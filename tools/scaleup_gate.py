@@ -53,16 +53,10 @@ import sys
 import tempfile
 import time
 
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, ROOT)
-# Spark's Python workers import the package too; they see PYTHONPATH,
-# not this process's sys.path
-os.environ["PYTHONPATH"] = os.pathsep.join(
-    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
-)
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from check_correctness import TABLES, compare_frames  # noqa: E402
+# check_correctness puts the repo root on sys.path and PYTHONPATH
+from check_correctness import ROOT, TABLES, compare_frames  # noqa: E402
 from scaleup_probe import BASE, _extra_probes, build_scaled_dir  # noqa: E402
 
 #: timing targets — every registered wide/scale operator plus the two
